@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 /** Benchmark main — one JSON line per run over SPARK_GRAFT_SF_DIR.
@@ -130,30 +129,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Keep AQE from coalescing CPU-dense, byte-light shuffles (hashed
-      // shingles, candidate pairs) below core count: the 1m default merges
-      // them to ~4 tasks and strands the other cores. No effect at real
-      // scale, where partitions dwarf 64k.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // InferFiltersFromGenerate EXCLUDED (r18): the rule synthesizes a
-      // pushable `size(e) > 0` filter below every explode; for COMPUTED
-      // generator inputs (every shingle/gram pipeline here) that clones
-      // the full tokenize+shingle expression into the filter — evaluated
-      // a second time per row, and, pushed below a spread repartition,
-      // re-run serially inside the file scan (measured: q_minhash_audit
-      // 5.2 s -> 1.4 s from this exclusion alone). Results are unchanged
-      // by construction: the inferred filter only pre-drops rows the
-      // explode drops anyway.
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = Session.cpus.toString
+    val spark = Session.build()
     spark.sparkContext.setLogLevel("WARN")
     // harness decision: the intended per-round checkpoint frees must not
     // flood the recorded log (graft package object doc)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Plan-audit tool: prints the formatted physical plan of one (or every)
   * SparkEntry query so scale hazards (CartesianProduct, unexpected full
@@ -12,18 +11,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse("ALL")
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // InferFiltersFromGenerate excluded (r18): see Bench.scala — the
-      // inferred pre-explode filter re-evaluates computed shingle/gram
-      // expressions (serially when pushed below a spread exchange);
-      // excluding it changes no results.
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.build()
     spark.sparkContext.setLogLevel("ERROR")
     val targets =
       if (name == "ALL") SparkEntry.queries.toSeq.sortBy(_._1)

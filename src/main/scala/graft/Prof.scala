@@ -1,28 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev-only phase profiler: runMain graft.Prof <name> [sfDir] — splits one
-  * query's wall time into analyze / optimize / physical-plan / execute.
+  * query's wall time into analyze / optimize / physical-plan / execute
+  * and prints each cold-cache rep's total.
   */
 object Prof {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MINPART", "1m"))
-      // InferFiltersFromGenerate excluded (r18): see Bench.scala — the
-      // inferred pre-explode filter re-evaluates computed shingle/gram
-      // expressions (serially when pushed below a spread exchange);
-      // excluding it changes no results.
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.build()
     spark.sparkContext.setLogLevel("ERROR")
     // Warm the session like Bench does so rep 1 isolates per-plan cost.
     spark.range(1000).selectExpr("sum(id)").collect()
@@ -49,7 +35,8 @@ object Prof {
     })
     val fn = SparkEntry.queries(name)
     (1 to 3).foreach { i =>
-      var t = System.nanoTime()
+      val t0 = System.nanoTime()
+      var t = t0
       def lap(label: String): Unit = {
         val now = System.nanoTime()
         println(f"[prof] $name rep $i $label: ${(now - t) / 1e9}%.2fs")
@@ -65,7 +52,10 @@ object Prof {
       lap("physical")
       val n = df.count()
       lap(s"execute(rows=$n)")
-      // cold-cache between reps, matching Bench/QBench methodology (r17)
+      println(f"[prof] $name rep $i total: ${(t - t0) / 1e9}%.2fs rows=$n")
+      // cold-cache between reps, matching Bench's methodology (r17):
+      // without it, pinned-model operators time their cache REUSE from
+      // rep 2 on, not the query
       graft.releaseCheckpoints(df)
       CacheScope.release(spark)
       spark.catalog.clearCache()

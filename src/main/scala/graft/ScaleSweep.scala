@@ -170,21 +170,7 @@ object ScaleSweep {
     val outDir = args.headOption.getOrElse("/tmp/graft_sf1")
     val wanted = args.lift(1).map(_.split(",").toSet)
       .getOrElse(heavyQueries.toSet ++ customLegs)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // InferFiltersFromGenerate excluded (r18): see Bench.scala — the
-      // inferred pre-explode filter re-evaluates computed shingle/gram
-      // expressions (serially when pushed below a spread exchange);
-      // excluding it changes no results.
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.build()
     spark.sparkContext.setLogLevel("WARN")
     graft.squelchIntendedUnpersistWarn()
 

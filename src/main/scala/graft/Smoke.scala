@@ -1,24 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev smoke runner mirroring the driver's t1 check: SparkEntry.entry must
   * return >0 rows on sf0.001. Prints the row count and the first rows.
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // InferFiltersFromGenerate excluded (r18): see Bench.scala — the
-      // inferred pre-explode filter re-evaluates computed shingle/gram
-      // expressions (serially when pushed below a spread exchange);
-      // excluding it changes no results.
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.build()
     spark.sparkContext.setLogLevel("WARN")
     val df = SparkEntry.entry(spark)
     println(s"[smoke] entry rows=${df.count()}")

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{DecimalType, TimestampType}
 import java.nio.file.{Files, Paths}
@@ -34,30 +34,10 @@ object Verify {
     // comma-separated subset of query names (driver always runs all)
     val only = args.lift(2).map(_.split(",").toSet)
     def wanted(name: String): Boolean = only.forall(_.contains(name))
-    // Default sized to the box (capped: sf0.01 queries are small, and
-    // past ~16 threads task-launch overhead outweighs parallelism): the
-    // dump is half the correctness gate's wall budget, and the driver
-    // does not export SPARK_GRAFT_CPUS — r12's gate came back empty
-    // partly because the dump idled 28 of 32 cores.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(Runtime.getRuntime.availableProcessors(), 16).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // int64 micros keeps the arrow schema identical to DuckDB's TIMESTAMP
-      // (INT96 reads back as timestamp[ns]).
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // InferFiltersFromGenerate excluded (r18): see Bench.scala — the
-      // inferred pre-explode filter re-evaluates computed shingle/gram
-      // expressions (serially when pushed below a spread exchange);
-      // excluding it changes no results.
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.build()
+    // int64 micros keeps the arrow schema identical to DuckDB's TIMESTAMP
+    // (INT96 reads back as timestamp[ns]).
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     spark.sparkContext.setLogLevel("WARN")
     graft.squelchIntendedUnpersistWarn()
     new java.io.File(outDir).mkdirs()

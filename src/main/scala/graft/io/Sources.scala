@@ -151,6 +151,24 @@ object Sources {
   def readCsv(spark: SparkSession, path: String, schema: StructType): DataFrame =
     spark.read.option("header", "true").schema(schema).csv(path)
 
+  /** The parquet table at `path`, or None when it holds no data yet. Only
+    * names Spark's readers see count as data: a write killed mid-job
+    * leaves just `_temporary/`, and reading that directory fails schema
+    * inference, so it must read as "no table" like a missing path does.
+    */
+  private[graft] def readParquetIfData(spark: SparkSession, path: String,
+                                       mergeSchema: Boolean = false): Option[DataFrame] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val hasData = fs.exists(p) && fs.listStatus(p).exists { st =>
+      val n = st.getPath.getName
+      !n.startsWith("_") && !n.startsWith(".")
+    }
+    if (!hasData) None
+    else if (mergeSchema) Some(spark.read.option("mergeSchema", "true").parquet(path))
+    else Some(spark.read.parquet(path))
+  }
+
   /** Archive processed files: move everything matching the glob from
     * `landing` to `archive/<batchId>/` (S6 — reference:
     * order_processing_incremental.py:213-227). Uses the Hadoop FileSystem

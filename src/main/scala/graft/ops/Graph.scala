@@ -37,6 +37,15 @@ import org.apache.spark.sql.functions._
   * tables are pinned once through [[graft.CacheScope]] so K rounds scan
   * the raw input once, not K times.
   *
+  * Every round loop here runs under the session's AQE. Both settings were
+  * measured at sf0.1: at local[8] (8 shuffle partitions) AQE off was
+  * 30-40% faster, because each per-round action re-plans stage by stage
+  * and that scheduling dominates at 8 partitions; at local[32] AQE off
+  * was 1.3-3.8× SLOWER across the loop family, because a checkpointed
+  * frame has no static size and only AQE's runtime stats turn the
+  * per-round sort-merge joins into broadcasts. The second effect grows
+  * with partition count — the regime a real cluster lives in.
+  *
   * Overflow bound (documented, `require`-checked): masses are bounded by
   * the conserved total `n · base`, so the round expression needs
   * `dampNum · n · base < 2^63` and the share expression
@@ -422,7 +431,6 @@ object Graph {
   def hopDistance(nodes: DataFrame, edges: DataFrame, seeds: DataFrame,
                   maxHops: Int = 6): DataFrame = {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
-    graft.withLoopAqeOff(nodes.sparkSession) {
     val edgeTbl = graft.CacheScope.pin(
       edges.select(col("src"), col("dst")).distinct()
         .repartition(col("src")))
@@ -482,7 +490,6 @@ object Graph {
     }
     nodeTbl.join(deltas.reduce(_ unionAll _), Seq("node"), "left")
       .select(col("node"), col("hops"))
-    }
   }
 
   /** WEIGHTED hop distance — [[hopDistance]]'s min-plus generalization
@@ -537,7 +544,6 @@ object Graph {
                             Option[scala.collection.mutable.Buffer[Long]] =
                             None): DataFrame = {
     require(maxRounds >= 0, s"maxRounds must be >= 0, got $maxRounds")
-    graft.withLoopAqeOff(nodes.sparkSession) {
     val guarded = when(col("weight") >= 0, col("weight"))
       .otherwise(raise_error(format_string(
         "hopDistanceWeighted needs non-negative weights; got %d",
@@ -553,7 +559,6 @@ object Graph {
     val fin = minPlusLoop(nodeTbl, edgeTbl, init, maxRounds, checkpointRows)
     nodeTbl.join(fin, Seq("node"), "left")
       .select(col("node"), col("dist"))
-    }
   }
 
   /** The shared min-plus relaxation loop over DELTA-CHECKPOINTED state —
@@ -653,7 +658,6 @@ object Graph {
   def hopDistanceFrom(state: DataFrame, nodes: DataFrame, edges: DataFrame,
                       seeds: DataFrame, rounds: Int = 2): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
-    graft.withLoopAqeOff(nodes.sparkSession) {
     val edgeTbl = graft.CacheScope.pin(
       edges.select(col("src"), col("dst")).distinct()
         .select(col("src"), col("dst"), lit(1L).as("weight"))
@@ -669,7 +673,6 @@ object Graph {
     val fin = minPlusLoop(nodeTbl, edgeTbl, init, rounds, None)
     nodeTbl.join(fin, Seq("node"), "left")
       .select(col("node"), col("dist").as("hops"))
-    }
   }
 
   /** [[hopDistanceFrom]] at the WEIGHTED family — warm-continue a
@@ -694,7 +697,6 @@ object Graph {
                               edges: DataFrame, seeds: DataFrame,
                               rounds: Int = 2): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
-    graft.withLoopAqeOff(nodes.sparkSession) {
     val guarded = when(col("weight") >= 0, col("weight"))
       .otherwise(raise_error(format_string(
         "hopDistanceWeightedFrom needs non-negative weights; got %d",
@@ -714,7 +716,6 @@ object Graph {
     val fin = minPlusLoop(nodeTbl, edgeTbl, init, rounds, None)
     nodeTbl.join(fin, Seq("node"), "left")
       .select(col("node"), col("dist"))
-    }
   }
 
   /** Build-and-commit the hop-distance relation as a versioned Manifest
@@ -864,39 +865,36 @@ object Graph {
                             patience: Int = 0): DataFrame = {
     require(maxRounds >= 1, s"need at least one round, got $maxRounds")
     require(patience >= 0, s"patience must be >= 0, got $patience")
-    val spark = nodes.sparkSession
-    graft.withLoopAqeOff(spark) {
-      val sym = graft.CacheScope.pin(symmetrized(edges))
-      var cur = nodes.select(col("node"), col("node").as("label"))
+    val sym = graft.CacheScope.pin(symmetrized(edges))
+    var cur = nodes.select(col("node"), col("node").as("label"))
+      .localCheckpoint(false)
+    var best: DataFrame = null
+    var bestNum: java.math.BigDecimal = null
+    var bestRound = 0
+    var r = 0
+    var plateaued = false
+    while (r < maxRounds && !plateaued) {
+      r += 1
+      val next = relabel(sym, cur)
+        .select(col("node"),
+          coalesce(col("nb_label"), col("label")).as("label"))
         .localCheckpoint(false)
-      var best: DataFrame = null
-      var bestNum: java.math.BigDecimal = null
-      var bestRound = 0
-      var r = 0
-      var plateaued = false
-      while (r < maxRounds && !plateaued) {
-        r += 1
-        val next = relabel(sym, cur)
-          .select(col("node"),
-            coalesce(col("nb_label"), col("label")).as("label"))
-          .localCheckpoint(false)
-        // the 1-row exact quality aggregate doubles as the round's
-        // materializing action
-        val num = modularityParts(next, sym).select("q_num").head().getDecimal(0)
-        val prev = cur
-        cur = next
-        if (bestNum == null || num.compareTo(bestNum) > 0) {
-          if (best != null && !(best eq prev)) graft.unpersistCheckpoint(best)
-          best = next
-          bestNum = num
-          bestRound = r
-        }
-        if (!(prev eq best)) graft.unpersistCheckpoint(prev)
-        if (patience > 0 && r - bestRound >= patience) plateaued = true
+      // the 1-row exact quality aggregate doubles as the round's
+      // materializing action
+      val num = modularityParts(next, sym).select("q_num").head().getDecimal(0)
+      val prev = cur
+      cur = next
+      if (bestNum == null || num.compareTo(bestNum) > 0) {
+        if (best != null && !(best eq prev)) graft.unpersistCheckpoint(best)
+        best = next
+        bestNum = num
+        bestRound = r
       }
-      if (!(cur eq best)) graft.unpersistCheckpoint(cur)
-      best.withColumn("rounds", lit(bestRound))
+      if (!(prev eq best)) graft.unpersistCheckpoint(prev)
+      if (patience > 0 && r - bestRound >= patience) plateaued = true
     }
+    if (!(cur eq best)) graft.unpersistCheckpoint(cur)
+    best.withColumn("rounds", lit(bestRound))
   }
 
   /** Per-round community-QUALITY ladder — [[modularity]] scored along
@@ -916,28 +914,24 @@ object Graph {
       s"depths must be >= 1, got $depths")
     require(depths == depths.sorted && depths.distinct == depths,
       s"depths must be strictly increasing, got $depths")
-    val spark = nodes.sparkSession
     val sym = graft.CacheScope.pin(symmetrized(edges))
-    val taps = graft.withLoopAqeOff(spark) {
-      val want = depths.toSet
-      var cur = nodes.select(col("node"), col("node").as("label"))
+    val want = depths.toSet
+    var cur = nodes.select(col("node"), col("node").as("label"))
+      .localCheckpoint(false)
+    val out = scala.collection.mutable.Buffer.empty[(Int, DataFrame)]
+    for (r <- 1 to depths.max) {
+      val next = relabel(sym, cur)
+        .select(col("node"),
+          coalesce(col("nb_label"), col("label")).as("label"))
         .localCheckpoint(false)
-      val out = scala.collection.mutable.Buffer.empty[(Int, DataFrame)]
-      for (r <- 1 to depths.max) {
-        val next = relabel(sym, cur)
-          .select(col("node"),
-            coalesce(col("nb_label"), col("label")).as("label"))
-          .localCheckpoint(false)
-        next.count() // materialize this round's checkpoint
-        if (want(r)) out += ((r, next))
-        // free the superseded frame unless it is itself a tapped depth
-        if (!out.exists(_._2 eq cur)) graft.unpersistCheckpoint(cur)
-        cur = next
-      }
-      out.toSeq
+      next.count() // materialize this round's checkpoint
+      if (want(r)) out += ((r, next))
+      // free the superseded frame unless it is itself a tapped depth
+      if (!out.exists(_._2 eq cur)) graft.unpersistCheckpoint(cur)
+      cur = next
     }
     // tapped checkpoints stay pinned: the returned lazy plan reads them
-    taps.map { case (r, lab) =>
+    out.map { case (r, lab) =>
       modularity(lab, sym, edgesSymmetrized = true)
         .select(lit(r).as("rounds"), col("two_m"),
           col("n_communities"), col("modularity"))
@@ -966,24 +960,22 @@ object Graph {
   def labelPropTrajectory(nodes: DataFrame, edges: DataFrame,
                           maxRounds: Int): DataFrame = {
     require(maxRounds >= 1, s"need at least one round, got $maxRounds")
-    graft.withLoopAqeOff(nodes.sparkSession) {
-      val sym = graft.CacheScope.pin(symmetrized(edges))
-      var cur = nodes.select(col("node"), col("node").as("label"))
+    val sym = graft.CacheScope.pin(symmetrized(edges))
+    var cur = nodes.select(col("node"), col("node").as("label"))
+      .localCheckpoint(false)
+    val taps = scala.collection.mutable.Buffer((0, cur))
+    for (r <- 1 to maxRounds) {
+      val next = relabel(sym, cur)
+        .select(col("node"),
+          coalesce(col("nb_label"), col("label")).as("label"))
         .localCheckpoint(false)
-      val taps = scala.collection.mutable.Buffer((0, cur))
-      for (r <- 1 to maxRounds) {
-        val next = relabel(sym, cur)
-          .select(col("node"),
-            coalesce(col("nb_label"), col("label")).as("label"))
-          .localCheckpoint(false)
-        next.count() // materialize this round's checkpoint
-        taps += ((r, next))
-        cur = next
-      }
-      taps.map { case (r, lab) =>
-        lab.select(lit(r).as("round"), col("node"), col("label"))
-      }.reduce(_ unionAll _)
+      next.count() // materialize this round's checkpoint
+      taps += ((r, next))
+      cur = next
     }
+    taps.map { case (r, lab) =>
+      lab.select(lit(r).as("round"), col("node"), col("label"))
+    }.reduce(_ unionAll _)
   }
 
   /** [[labelPropResidual]] read off a [[labelPropTrajectory]]: the
@@ -1329,7 +1321,6 @@ object Graph {
                           init: Option[DataFrame] = None)
       : (DataFrame, DataFrame, Int) = {
     require(maxRounds >= 1, s"need at least one round, got $maxRounds")
-    graft.withLoopAqeOff(nodes.sparkSession) {
     val sym = graft.CacheScope.pin(symmetrized(edges))
     var ckpt = init
       .getOrElse(nodes.select(col("node"), col("node").as("label")))
@@ -1356,7 +1347,6 @@ object Graph {
       r += 1
     }
     (labels, ckpt, taken)
-    }
   }
 
   /** Community detection by SEMI-SYNCHRONOUS label propagation — the
@@ -1473,7 +1463,6 @@ object Graph {
       : (DataFrame, DataFrame, Int) = {
     require(maxRounds >= 1, s"need at least one round, got $maxRounds")
     require(numColors >= 2, s"need at least two colors, got $numColors")
-    graft.withLoopAqeOff(nodes.sparkSession) {
     val sym = graft.CacheScope.pin(symmetrized(edges))
     // per-color edge SLICES pinned once over the pinned base (r18):
     // every round's sub-step c previously re-read and re-filtered the
@@ -1524,7 +1513,6 @@ object Graph {
       r += 1
     }
     (labels, ckpt, taken)
-    }
   }
 
   /** k-core membership by iterative peeling (Seidman 1983, "Network
@@ -1552,7 +1540,6 @@ object Graph {
             maxRounds: Int = 8): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(maxRounds >= 1, s"need at least one peel, got $maxRounds")
-    graft.withLoopAqeOff(nodes.sparkSession) {
     var und = edges.filter(col("src") =!= col("dst"))
       .select(least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v"))
@@ -1587,7 +1574,6 @@ object Graph {
       .unionAll(und.select(col("v").as("node")))
       .groupBy("node").agg(count(lit(1)).as("degree"))
       .filter(col("degree") >= k)
-    }
   }
 
   private def iterate(nodeTbl: DataFrame, edges: DataFrame,
@@ -1619,7 +1605,6 @@ object Graph {
     require(dampNum >= 0 && dampNum <= dampDen && dampDen > 0,
       s"damping must satisfy 0 <= dampNum <= dampDen, got $dampNum/$dampDen")
     require(base > 0, s"base mass must be positive, got $base")
-    graft.withLoopAqeOff(nodeTbl.sparkSession) {
     // one setup job for both counts (r17; was two driver actions —
     // each is a full job-latency at local scale, and the node table is
     // pinned so the second scan bought nothing)
@@ -1707,6 +1692,5 @@ object Graph {
       taps.foreach(_ += ((round, next)))
     }
     (mass, round)
-    }
   }
 }

@@ -600,11 +600,8 @@ object Dedup {
     // each round to the rows it actually carries while early big rounds
     // keep width (64 MB advisory → thousands of partitions at 100 TB edge
     // scale). Loop-scoped: saved and restored around the rounds only.
-    val sess = pairs.sparkSession
-    val pfKey = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
-    val pfPrev = sess.conf.getOption(pfKey)
-    sess.conf.set(pfKey, "false")
-    try {
+    graft.withConf(pairs.sparkSession,
+      "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false") {
     while (!converged && iter < maxIter) {
       // One materialization per round: small-star consumes large-star's
       // plan directly (bounded depth — a handful of ops), the round's
@@ -617,8 +614,6 @@ object Dedup {
       val nextCnt = next.count()
       converged = nextCnt == cnt &&
         next.except(edges).limit(1).count() == 0
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(s"[cc] round $iter: edges $cnt -> $nextCnt converged=$converged")
       // Drop the superseded round's blocks — otherwise up to maxIter edge
       // tables sit in executor storage for the whole computation. NOTE
       // Dataset.unpersist is a no-op here (it only uncaches
@@ -632,9 +627,6 @@ object Dedup {
       cnt = nextCnt
       iter += 1
     }
-    } finally pfPrev match {
-      case Some(v) => sess.conf.set(pfKey, v)
-      case None => sess.conf.unset(pfKey)
     }
     require(converged, s"component labels did not converge in $maxIter iterations")
     // Fixpoint edges are exactly (member, component-min) — one row per

@@ -97,54 +97,21 @@ package object graft {
       ctx.updateLoggers()
     } catch { case _: Throwable => () } // log backend absent/replaced: cosmetic
 
-  /** Hook around an iterative operator's round loop: AQE stays ON by
-    * default; `spark.graft.loop.aqe=false` disables it for the loop's
-    * actions (restored after). BOTH directions were measured this round
-    * and the result is a genuine configuration-dependent trade, recorded
-    * here so it is not re-litigated:
-    *
-    *   - local[8], shuffle.partitions=8, sf0.1: AQE OFF is 30-40%
-    *     faster (labelPropConverged 2.2→1.4 s, 17-round semisync
-    *     15.4→10.9 s) — each per-round action under AQE re-plans
-    *     stage-by-stage and every exchange becomes a separately
-    *     scheduled sub-job, and at 8 partitions that scheduling
-    *     overhead dominates.
-    *   - local[32], shuffle.partitions=32, sf0.1 (the official bench
-    *     config): AQE OFF is 1.3-3.8× SLOWER across the whole loop
-    *     family (gated LPA 4.8→17.9 s, kcore 2.6→9.4 s, semisync
-    *     16.2→40.0 s, measured BENCH r15 pre-revert vs r14). The
-    *     dominant AQE benefit is not coalescing but RUNTIME JOIN
-    *     PLANNING: a checkpointed label frame has no static size, so
-    *     without AQE every per-round join plans as sort-merge with two
-    *     32-partition exchanges; AQE's runtime stats convert them to
-    *     broadcasts.
-    *
-    * The second effect grows with partition count and is the one a real
-    * cluster lives in, so AQE-on is the default; the conf exists for
-    * small-parallelism latency-bound deployments where the first
-    * regime's measurement applies. Results are identical either way.
-    *
-    * Single-threaded-session assumption (opt-in path only): when the
-    * escape hatch IS set, the override mutates the session-global
-    * `spark.sql.adaptive.enabled` for the loop's duration, so other
-    * work concurrently executing on the SAME SparkSession (a streaming
-    * micro-batch, an overlapping loop) would run without AQE or clobber
-    * the restore value. Deployments that opt in must run loops on a
-    * dedicated session (`spark.newSession()` shares the cluster but not
-    * the conf); the default AQE-on path never mutates anything.
+  /** Run `body` with the session conf `entry` (key -> value) set, then put
+    * the key back: its prior value is restored, or it is unset when it had
+    * none — also when `body` throws. The override is session-global for
+    * its duration, so other work running concurrently on the SAME session
+    * sees it too; scope it to the write or loop that needs it.
     */
-  private[graft] def withLoopAqeOff[T](
-      spark: org.apache.spark.sql.SparkSession)(body: => T): T = {
-    if (!spark.conf.getOption("spark.graft.loop.aqe").contains("false")) body
-    else {
-      val key = "spark.sql.adaptive.enabled"
-      val prev = spark.conf.getOption(key)
-      spark.conf.set(key, "false")
-      try body
-      finally prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None    => spark.conf.unset(key)
-      }
+  private[graft] def withConf[T](spark: org.apache.spark.sql.SparkSession,
+                                 entry: (String, String))(body: => T): T = {
+    val (key, value) = entry
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body
+    finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None    => spark.conf.unset(key)
     }
   }
 

@@ -107,13 +107,9 @@ object Daily {
     val trends = write(revenueTrends(fact, asOf), "revenue_trends")
     val top = write(topProducts(fact), "top_products")
     val audit = {
-      val p = new org.apache.hadoop.fs.Path(wh.qualityChecks)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val summary =
-        if (fs.exists(p) && fs.listStatus(p).nonEmpty)
-          ops.Quality.qualitySummary(
-            spark.read.option("mergeSchema", "true").parquet(wh.qualityChecks))
-        else {
+      val summary = graft.io.Sources
+        .readParquetIfData(spark, wh.qualityChecks, mergeSchema = true)
+        .map(ops.Quality.qualitySummary).getOrElse {
           // no violations ever logged: an EMPTY report still lands ("zero
           // issues" is a statement; an absent file is a question)
           import org.apache.spark.sql.types._

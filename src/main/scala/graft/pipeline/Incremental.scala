@@ -80,11 +80,11 @@ object Incremental {
       dimProductsSnap(wh))
   }
 
-  private def readIfExists(spark: SparkSession, path: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p) && fs.listStatus(p).nonEmpty) Some(spark.read.parquet(path)) else None
-  }
+  /** Session conf that scopes an overwrite to the partitions it writes —
+    * the hourly merge here and the streaming facade's merges.
+    */
+  private[graft] val DynamicOverwrite =
+    "spark.sql.sources.partitionOverwriteMode" -> "dynamic"
 
   /** One incremental run over whatever .json files sit in `landingDir`.
     * Batch equivalent of the 15-min cron tick; the streaming facade
@@ -148,10 +148,10 @@ object Incremental {
 
       // Fact transform (J1/P5/A3 over the real nested shape) with the J4
       // idempotency anti-join against the existing fact table.
-      val dimCustomers = readIfExists(spark, wh.dimCustomers)
+      val dimCustomers = Sources.readParquetIfData(spark, wh.dimCustomers)
         .getOrElse(spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           Sources.customersSchema))
-      val dimProducts = readIfExists(spark, wh.dimProducts)
+      val dimProducts = Sources.readParquetIfData(spark, wh.dimProducts)
         .getOrElse(spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           Sources.productsSchema))
       val enriched = Nested.factTransform(staging, dimCustomers, dimProducts)
@@ -159,7 +159,7 @@ object Incremental {
       // result is EXACTLY the plain anti-join, but the fact table is only
       // scanned (map-side partial blooms), never shuffled — the dominant
       // cost of a 15-minute cadence against a 100 TB fact otherwise.
-      val guarded = readIfExists(spark, wh.factOrders) match {
+      val guarded = Sources.readParquetIfData(spark, wh.factOrders) match {
         case Some(existing) =>
           ops.Distribution.bloomAntiJoin(enriched, existing.select("order_id"),
             "order_id", "order_id")
@@ -186,12 +186,13 @@ object Incremental {
       // the batch's time span) and as literals they drive static partition
       // pruning below. Collected BEFORE the append regardless (the append
       // recaches the anti-join against the new fact contents).
-      val touchedDates = staging
-        .select(to_date(col("order_timestamp")).as("d")).distinct()
-        .collect().map(_.getDate(0))
-      val touchedHours = staging
-        .select(date_trunc("hour", col("order_timestamp")).as("h")).distinct()
-        .collect().map(_.getTimestamp(0))
+      // One distinct job yields both sets (a date is a function of its hour).
+      val touched = staging
+        .select(date_trunc("hour", col("order_timestamp")).as("h"),
+          to_date(col("order_timestamp")).as("d"))
+        .distinct().collect()
+      val touchedHours = touched.map(_.getTimestamp(0))
+      val touchedDates = touched.map(_.getDate(1)).distinct
 
       // S4 audit append, idempotent like the fact load: only mismatches on
       // orders this run actually adds (semi-join against the anti-joined
@@ -203,15 +204,12 @@ object Incremental {
       // in a pre-existing warehouse predate that column — the default
       // single-file schema pick could omit it, making the guard report
       // false and a crash-rerun re-append this batch's audit rows.
-      val alreadyAudited = {
-        val p = new org.apache.hadoop.fs.Path(wh.qualityChecks)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(p) && fs.listStatus(p).nonEmpty) {
-          val df = spark.read.option("mergeSchema", "true").parquet(wh.qualityChecks)
-          df.columns.contains("batch_id") &&
-            df.filter(col("batch_id") === batchId).limit(1).count() > 0
-        } else false
-      }
+      val alreadyAudited =
+        Sources.readParquetIfData(spark, wh.qualityChecks, mergeSchema = true)
+          .exists { df =>
+            df.columns.contains("batch_id") &&
+              df.filter(col("batch_id") === batchId).limit(1).count() > 0
+          }
       if (newCount > 0 && !alreadyAudited && mismGate.violations > 0) {
         val newMismatches = mismatches.join(
           newRows.select(col("order_id")).distinct(),
@@ -237,10 +235,9 @@ object Incremental {
       // append committed but this overwrite didn't, and recomputing
       // already-correct hours is idempotent — a bounded recompute is the
       // price of the retry contract.
-      if (touchedHours.nonEmpty && readIfExists(spark, wh.factOrders).nonEmpty) {
-        val fact = spark.read.parquet(wh.factOrders)
-          .filter(col("order_date").isin(touchedDates.toIndexedSeq: _*))
+      if (touchedHours.nonEmpty) Sources.readParquetIfData(spark, wh.factOrders).foreach { fact =>
         val hourly = fact
+          .filter(col("order_date").isin(touchedDates.toIndexedSeq: _*))
           .groupBy(date_trunc("hour", col("order_timestamp")).as("metric_hour"))
           .agg(
             countDistinct(col("order_id")).as("total_orders"),
@@ -249,7 +246,7 @@ object Incremental {
             countDistinct(col("customer_id")).as("unique_customers"))
           .withColumn("updated_at", current_timestamp())
           .filter(col("metric_hour").isin(touchedHours.toIndexedSeq: _*))
-        withDynamicOverwrite(spark) {
+        graft.withConf(spark, DynamicOverwrite) {
           hourly.write.mode(SaveMode.Overwrite).partitionBy("metric_hour").parquet(wh.aggHourly)
         }
       }
@@ -282,18 +279,4 @@ object Incremental {
     Retry.withRetries(policy, sleep, onAttempt) { _ =>
       run(spark, landingDir, wh, batchId, failOnDuplicates)
     }
-
-  /** Scope the dynamic-partition-overwrite mode to one write. Shared with
-    * the streaming facade's foreachBatch hourly merge.
-    */
-  private[graft] def withDynamicOverwrite[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "dynamic")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
 }

@@ -129,12 +129,9 @@ object IncrementalStream {
     }
 
   private def readDimOr(spark: SparkSession, path: String,
-                        schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p) && fs.listStatus(p).nonEmpty) spark.read.parquet(path)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-  }
+                        schema: org.apache.spark.sql.types.StructType): DataFrame =
+    Sources.readParquetIfData(spark, path).getOrElse(
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema))
 
   /** Event-time hourly metrics as a true stream (the A4 aggregate with
     * late-data handling the reference lacks — its `DATE(...) = CURRENT_DATE`
@@ -178,7 +175,7 @@ object IncrementalStream {
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
         if (!batch.isEmpty) {
-          Incremental.withDynamicOverwrite(batch.sparkSession) {
+          graft.withConf(batch.sparkSession, Incremental.DynamicOverwrite) {
             batch.write.mode(SaveMode.Overwrite)
               .partitionBy("metric_hour").parquet(aggPath)
           }
@@ -218,7 +215,7 @@ object IncrementalStream {
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
         if (!batch.isEmpty) {
-          Incremental.withDynamicOverwrite(batch.sparkSession) {
+          graft.withConf(batch.sparkSession, Incremental.DynamicOverwrite) {
             // partition on (hour, type): update mode emits only touched
             // pairs, so overwriting an hour-level partition would drop
             // that hour's OTHER types — the leaf must be the update grain
@@ -312,7 +309,7 @@ object IncrementalStream {
               Temporal.scd2(batch.limit(0), key, ts, attrs, tieBreak)
           val next = Temporal.scd2Apply(affected, batch, key, ts, attrs, tieBreak)
             .withColumn("key_bucket", bucket)
-          Incremental.withDynamicOverwrite(sp) {
+          graft.withConf(sp, Incremental.DynamicOverwrite) {
             next.write.mode(SaveMode.Overwrite)
               .partitionBy("key_bucket").parquet(historyPath)
           }
@@ -857,15 +854,7 @@ object IncrementalStream {
           graft.io.Manifest.currentVersion(sp, registryTable).isDefined &&
             graft.io.Manifest.currentTag(sp, registryTable).contains(tag)
         if (!batch.isEmpty && !alreadyCommitted) {
-          val seed = sp.read.parquet(corpusPath)
-          val p = new org.apache.hadoop.fs.Path(acceptedPath)
-          val fs = p.getFileSystem(sp.sparkContext.hadoopConfiguration)
-          val corpus =
-            if (fs.exists(p) &&
-              fs.listStatus(p).exists(!_.getPath.getName.startsWith("_")))
-              seed.unionByName(
-                sp.read.parquet(acceptedPath).select(seed.columns.map(col): _*))
-            else seed
+          val corpus = corpusWithAccepted(sp, corpusPath, acceptedPath)
           val registry = graft.io.Manifest.read(sp, registryTable)
           // r17: the served DOMAIN gate as stage 0 — read per batch so
           // a decision-table refresh between batches takes effect at
@@ -1422,14 +1411,8 @@ object IncrementalStream {
   private def corpusWithAccepted(sp: SparkSession, corpusPath: String,
                                  acceptedPath: String): DataFrame = {
     val seed = sp.read.parquet(corpusPath)
-    val p = new org.apache.hadoop.fs.Path(acceptedPath)
-    val fs = p.getFileSystem(sp.sparkContext.hadoopConfiguration)
-    if (fs.exists(p) &&
-      fs.listStatus(p).exists(!_.getPath.getName.startsWith("_")))
-      seed.unionByName(
-        sp.read.parquet(acceptedPath)
-          .select(seed.columns.map(col).toIndexedSeq: _*))
-    else seed
+    Sources.readParquetIfData(sp, acceptedPath).fold(seed)(accepted =>
+      seed.unionByName(accepted.select(seed.columns.map(col).toIndexedSeq: _*)))
   }
 
   /** The probe→accept→update ingest loop shared by the edit-distance,

@@ -40,6 +40,17 @@ class PipelineSpec extends SparkSpec {
     assert(r2.observed("n_lines") == 0L, "no-op re-run observes zero lines")
   }
 
+  test("a write killed before its first commit leaves no fact table to read") {
+    val (landing, wh) = freshDirs()
+    // all a crashed first append leaves behind: the committer's scratch dir
+    Files.createDirectories(java.nio.file.Paths.get(wh.factOrders, "_temporary", "0"))
+    DataGen.writeOrdersNdjson(spark, landing, n = 40, seed = 10L)
+    val lines = spark.read.json(landing).select(explode_outer(col("items"))).count()
+    val r = Incremental.run(spark, landing, wh, "after_crash")
+    assert(r.newFactRows == lines)
+    assert(spark.read.parquet(wh.factOrders).count() == lines)
+  }
+
   test("empty landing dir short-circuits (sensor semantics)") {
     val (landing, wh) = freshDirs()
     Files.createDirectories(java.nio.file.Paths.get(landing))
