@@ -52,6 +52,44 @@ object Manifest {
   private def fs(spark: SparkSession, path: String) =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
+  /** Run `write` (a snapshot dir fill) under its own job tag; if it
+    * throws, cancel the tag's jobs and wait, at most 30 s, until their
+    * tasks have ended, then rethrow. A failed write job returns to the
+    * driver while its other tasks may still be running, and a late one
+    * (partition 0 writes a file even when empty) would recreate
+    * `v<N>/_temporary` after the caller's cleanup deleted `v<N>/`; the
+    * next writer's version numbering would then skip that slot.
+    *
+    * Task state is read from the status store, which the listener bus
+    * fills asynchronously. An empty FENCE job posts its start event
+    * straight onto the bus, so it shows in the store only after every
+    * earlier event (the failed job's start, its task starts, the stage
+    * failure) has been applied; the active-task counts are trusted only
+    * once it does. A tag, not a job group: a caller's own group (a
+    * streaming query's foreachBatch runs under one) stays in force.
+    */
+  private def settleOnFailure[T](spark: SparkSession)(write: => T): T = {
+    val sc = spark.sparkContext
+    val tag = s"graft-manifest-write-${java.util.UUID.randomUUID()}"
+    sc.addJobTag(tag)
+    try write
+    catch {
+      case t: Throwable =>
+        sc.removeJobTag(tag)
+        sc.cancelJobsWithTag(tag)
+        val fence = s"$tag-fence"
+        sc.addJobTag(fence)
+        try sc.emptyRDD[Int].count() finally sc.removeJobTag(fence)
+        val st = sc.statusTracker
+        def settled = st.getJobIdsForTag(fence).nonEmpty &&
+          st.getJobIdsForTag(tag).flatMap(st.getJobInfo).flatMap(_.stageIds)
+            .flatMap(st.getStageInfo).forall(_.numActiveTasks == 0)
+        val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+        while (!settled && System.nanoTime() < deadline) Thread.sleep(10)
+        throw t
+    } finally sc.removeJobTag(tag)
+  }
+
   /** Atomic exclusive create of an empty coordination file. Hadoop's
     * `create(path, overwrite = false)` is genuinely atomic on HDFS, but
     * RawLocalFileSystem implements it as check-then-open — two racing
@@ -232,7 +270,7 @@ object Manifest {
     // read it, and a spurious bump only fails an append loudly (the
     // safe direction, see bumpEpoch).
     try {
-      writeFn(dir)
+      settleOnFailure(spark)(writeFn(dir))
       if (!f.exists(claim)) abortVacuumed()
       // replace-vs-append fence: the epoch moves BEFORE this replace
       // becomes visible, so an in-flight append can never observe the
@@ -397,7 +435,7 @@ object Manifest {
         // a process CRASH should leave a claim behind (the commit()
         // rationale verbatim)
         try {
-          next.write.parquet(dir)
+          settleOnFailure(spark)(next.write.parquet(dir))
           tag.foreach { t =>
             val out = f.create(new Path(s"$dir/$TagFile"), false)
             try out.write(t.getBytes(java.nio.charset.StandardCharsets.UTF_8))

@@ -294,27 +294,6 @@ object Distribution {
       .write.mode(mode).parquet(path)
   }
 
-  /** Bloom-prefiltered anti-join — the runtime-filter pattern applied to
-    * the reference's J4 idempotency guard, where it matters most at
-    * 100 TB: `staged ANTI JOIN fact ON order_id` shuffles the ENTIRE fact
-    * table every 15-minute run just to prove most staged rows are new.
-    *
-    * Instead: (1) build a bloom sketch of the filter side's keys as a
-    * distributed aggregate (map-side partial blooms, one merged row — the
-    * filter side is SCANNED but never SHUFFLED); (2) inline the sketch as
-    * a binary literal and probe it in the big side's scan (codegen'd
-    * `might_contain`, no UDF); (3) rows the bloom rejects are DEFINITELY
-    * new (blooms have no false negatives) and skip the join entirely;
-    * only the `maybe` sliver (true matches + fpp false positives) goes
-    * through the exact anti-join. Result is EXACTLY the plain anti-join —
-    * the bloom only routes rows — which is what the oracle checks.
-    * NULL big-side keys route to the maybe branch, preserving anti-join's
-    * null semantics (a null key never matches, so the row is kept).
-    *
-    * `expectedItems` sizes the sketch (default 1% fpp at that count); the
-    * sketch itself transits the driver (~1.2 MB per 10⁶ keys at 1%) —
-    * the same trade Spark's own InjectRuntimeFilter makes.
-    */
   /** N-dimensional [[writeZOrdered]]: same range-partition + local sort,
     * keyed on [[zValueN]] over `cols` — every file covers a tight
     * k-dimensional bounding box, at ⌊62/k⌋ bits of per-dimension
@@ -330,28 +309,47 @@ object Distribution {
       .write.mode(mode).parquet(path)
   }
 
+  /** Bloom-prefiltered anti-join — the runtime-filter pattern applied to
+    * the reference's J4 idempotency guard, where it matters most at
+    * 100 TB: `staged ANTI JOIN fact ON order_id` shuffles the ENTIRE fact
+    * table every 15-minute run just to prove most staged rows are new.
+    *
+    * Instead: (1) build a bloom sketch of the filter side's keys as a
+    * distributed aggregate (map-side partial blooms, one merged row — the
+    * filter side is SCANNED but never SHUFFLED); (2) plan the sketch as a
+    * scalar subquery ([[graft.functions.BloomFns.sketch]]) and probe it in
+    * the big side's scan (codegen'd `might_contain`, no UDF); (3) rows the
+    * bloom rejects are DEFINITELY new (blooms have no false negatives) and
+    * skip the join entirely; only the `maybe` sliver (true matches + fpp
+    * false positives) goes through the exact anti-join. Result is EXACTLY
+    * the plain anti-join — the bloom only routes rows — which is what the
+    * oracle checks. A NULL big-side key is kept either way (its hash is
+    * not null, and in the maybe branch a null key never matches).
+    *
+    * Nothing runs here: the sketch is built when the result executes,
+    * once per action (both union branches reuse the one subquery), and
+    * the plan carries a subquery reference instead of the ~1.2 MB (per
+    * 10⁶ keys at 1%) sketch as a literal. An unpinned result therefore
+    * rebuilds the sketch on every action; `Incremental.run` pins its
+    * guarded rows. An empty filter side yields a NULL sketch, which
+    * routes every row to the definitely-new branch.
+    * `expectedItems` sizes the sketch (default 1% fpp at that count).
+    */
   def bloomAntiJoin(big: DataFrame, filterSide: DataFrame,
                     bigKey: String, filterKey: String,
                     expectedItems: Long = 1000000L): DataFrame = {
     import graft.functions.BloomFns
-    val spark = big.sparkSession
-    BloomFns.register(spark)
-    val bfRow = filterSide
-      .agg(call_function(BloomFns.aggFnName, xxhash64(col(filterKey)),
-        lit(expectedItems)).as("bf"))
-      .head()
-    // empty/all-null filter side → no keys can match → everything is new
-    if (bfRow.isNullAt(0)) return big
-    val bf = bfRow.getAs[Array[Byte]](0)
+    val sketch = BloomFns.sketch(filterSide, col(filterKey), expectedItems)
     // probe-flag column name must not collide with a real big-side column
     val flagCol = Iterator.from(0)
       .map(i => if (i == 0) "_in_bloom" else s"_in_bloom$i")
       .find(!big.columns.contains(_)).get
+    // the flag is NULL only for a NULL sketch (empty filter side: no key
+    // can match), so coalescing to false is exact
     val flagged = big.withColumn(flagCol,
-      call_function(BloomFns.mightContainFnName, lit(bf), xxhash64(col(bigKey))))
-    val definiteNew = flagged.filter(col(flagCol) === false).drop(flagCol)
-    val maybe = flagged.filter(col(flagCol) === true || col(flagCol).isNull)
-      .drop(flagCol)
+      coalesce(BloomFns.mightContain(sketch, col(bigKey)), lit(false)))
+    val definiteNew = flagged.filter(!col(flagCol)).drop(flagCol)
+    val maybe = flagged.filter(col(flagCol)).drop(flagCol)
     // rename the probe column so bigKey == filterKey resolves unambiguously
     // (left_anti output carries only left columns, so the name vanishes)
     val filterKeys = filterSide.select(col(filterKey).as("_bloom_fk"))

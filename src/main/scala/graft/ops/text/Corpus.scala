@@ -561,11 +561,14 @@ object Corpus {
     * benchmark's exact shingle set is too big to broadcast, probe a bloom
     * sketch of it instead. The benchmark side is scanned but never
     * shuffled (map-side partial blooms merge to one row — insertion is
-    * idempotent, so no distinct pass either); the sketch inlines as a
-    * binary literal probed codegen'd in the train scan, exactly the
+    * idempotent, so no distinct pass either); the sketch is planned as a
+    * scalar subquery ([[graft.functions.BloomFns.sketch]]) probed
+    * codegen'd in the train scan, exactly the
     * [[graft.ops.Distribution.bloomAntiJoin]] machinery pointed at
-    * shingles. Error is one-sided: blooms have no false negatives, so
-    * every truly contaminated doc is flagged (`maybe_contaminated` ⊇
+    * shingles. Nothing runs here: the sketch is built when the result
+    * executes, so an unpinned result rebuilds it on every action. Error
+    * is one-sided: blooms have no false negatives, so every truly
+    * contaminated doc is flagged (`maybe_contaminated` ⊇
     * exact `contaminated`), while fpp can inflate `n_overlap_max` (an
     * upper bound on the exact distinct-overlap count) and flag clean
     * docs for a second-pass exact check. `expectedShingles` sizes the
@@ -574,19 +577,14 @@ object Corpus {
   def decontaminateBloom(train: DataFrame, benchmark: DataFrame, n: Int = 3,
       minOverlap: Int = 1, expectedShingles: Long = 1L << 20): DataFrame = {
     import graft.functions.BloomFns
-    import org.apache.spark.sql.functions.call_function
-    BloomFns.register(train.sparkSession)
     val sh = array_distinct(shingles(tokens(col("text")), n))
-    val sketch = benchmark
-      .select(explode(sh).as("sh"))
-      .agg(call_function(BloomFns.aggFnName, xxhash64(col("sh")),
-        lit(expectedShingles)))
-      .head().getAs[Array[Byte]](0)
+    val sketch = BloomFns.sketch(benchmark.select(explode(sh).as("sh")),
+      col("sh"), expectedShingles)
     val maybe = train
       .select(col("doc_id"), explode(sh).as("sh"))
-      // null sketch = empty benchmark: nothing can overlap
-      .filter(if (sketch == null) lit(false)
-        else call_function(BloomFns.mightContainFnName, lit(sketch), xxhash64(col("sh"))))
+      // null sketch = empty benchmark: the probe is NULL, which the filter
+      // drops, so nothing can overlap
+      .filter(BloomFns.mightContain(sketch, col("sh")))
       // per-doc shingles are pre-distinct'd, so the count bounds the
       // exact distinct overlap from above
       .groupBy("doc_id").agg(count(lit(1)).as("n_overlap_max"))

@@ -94,17 +94,19 @@ object Incremental {
   def run(spark: SparkSession, landingDir: String, wh: Warehouse,
           batchId: String, failOnDuplicates: Boolean = true): RunResult = {
     val stagingRaw = Sources.readOrdersJsonValidated(spark, landingDir)
-    val staged = stagingRaw.count()
-    if (staged == 0)
-      return RunResult(batchId, 0, 0, Nil, 0) // sensor: nothing landed
-
     // pin/unpin, not bare cache/unpersist: the repo-wide CacheScope
     // convention — a caller-level release(spark) can then reclaim
     // anything a crashed run left pinned, and the registry stays an
     // accurate census of live operator caches (this module was the last
-    // one outside the convention, r14)
+    // one outside the convention, r14). Pinned BEFORE the sensor count,
+    // so that count is the batch's one JSON parse and fills the cache
+    // every later gate reads.
     graft.CacheScope.pin(stagingRaw)
     try {
+      val staged = stagingRaw.count()
+      if (staged == 0)
+        return RunResult(batchId, 0, 0, Nil, 0) // sensor: nothing landed
+
       // Schema-validation gate (README.md:126): a malformed NDJSON line
       // fails the load, like BigQuery's schema-checked load job would.
       // Gate BEFORE any transform — a corrupt line parses every declared

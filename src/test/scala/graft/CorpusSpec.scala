@@ -1,7 +1,9 @@
 package graft
 
 import graft.ops.text.Corpus
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.BinaryType
 
 /** Corpus-preparation operators: repetition, vocab, chunking, hash split,
   * PII scrubbing.
@@ -346,6 +348,24 @@ class CorpusSpec extends SparkSpec {
     val none = Corpus.decontaminateBloom(train, docs(), n = 3)
       .agg(sum(col("n_overlap_max")), max(col("maybe_contaminated"))).head()
     assert(none.getLong(0) == 0L && !none.getBoolean(1))
+  }
+
+  test("decontaminateBloom plans its default-size sketch as a subquery, not " +
+    "a binary literal") {
+    val bench = docs(1001L -> "the quick brown fox jumps over the lazy dog")
+    val train = docs(1L -> "a quick brown fox jumps high", 2L -> "nothing shared here")
+    val out = Corpus.decontaminateBloom(train, bench)
+    val plan = out.queryExecution.optimizedPlan
+    val binaryLiterals = plan.collectWithSubqueries { case node =>
+      node.expressions.map(_.collect {
+        case l: Literal if l.dataType == BinaryType => l
+      }.size).sum
+    }.sum
+    assert(binaryLiterals == 0, "the sketch must not be inlined as a literal")
+    val rendered = plan.toString.length
+    assert(rendered < 100000, s"optimized plan renders $rendered characters")
+    assert(out.filter(col("maybe_contaminated")).select("doc_id").as[Long]
+      .collect().toSeq == Seq(1L))
   }
 
   test("corpusStatsApprox tracks the exact percentiles on the fixture corpus") {

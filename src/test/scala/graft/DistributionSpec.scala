@@ -2,7 +2,9 @@ package graft
 
 import graft.ops.Distribution
 import org.apache.spark.sql.SaveMode
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.BinaryType
 
 /** Physical-distribution semantics AND plan shape: bucketed joins must not
   * shuffle, salted joins must match their unsalted results exactly.
@@ -88,6 +90,25 @@ class DistributionSpec extends SparkSpec {
       big.withColumnRenamed("k", "id"), filter.withColumnRenamed("fk", "id"),
       "id", "id").select("id").as[Long].collect().sorted.toSeq
     assert(sameName == plain)
+  }
+
+  test("bloomAntiJoin plans its default-size sketch as a subquery, not a " +
+    "binary literal") {
+    // ranges, not local rows: the optimizer would fold a probe over a
+    // local relation into new local rows, literal and all
+    val big = spark.range(1L, 3001L).toDF("k")
+    val filter = spark.range(1L, 1001L).toDF("fk")
+    val out = Distribution.bloomAntiJoin(big, filter, "k", "fk")
+    val plan = out.queryExecution.optimizedPlan
+    val binaryLiterals = plan.collectWithSubqueries { case node =>
+      node.expressions.map(_.collect {
+        case l: Literal if l.dataType == BinaryType => l
+      }.size).sum
+    }.sum
+    assert(binaryLiterals == 0, "the sketch must not be inlined as a literal")
+    val rendered = plan.toString.length
+    assert(rendered < 100000, s"optimized plan renders $rendered characters")
+    assert(out.count() == 2000L)
   }
 
   test("skewAudit: exact counts, shares, and deterministic hot ranking") {

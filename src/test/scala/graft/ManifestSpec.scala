@@ -377,6 +377,32 @@ class ManifestSpec extends SparkSpec {
     assert(Manifest.write((1L to 3L).toDF("x"), t) == 3)
   }
 
+  test("a FAILED write waits for its straggler tasks before the cleanup, " +
+    "so no late task recreates the released version dir") {
+    val t = tmp()
+    val thrown = Files.createTempDirectory("graft_straggler").resolve("thrown").toString
+    // partition 1 fails; partition 0 waits for that failure and only then
+    // emits its row, so its part file lands after the job has failed
+    val straggling = spark.range(0, 2, 1, 2).map { i =>
+      val signal = java.nio.file.Paths.get(thrown)
+      if (i == 1L) {
+        Files.createFile(signal)
+        throw new IllegalStateException("boom")
+      }
+      while (!Files.exists(signal)) Thread.sleep(5)
+      Thread.sleep(300)
+      i
+    }.toDF("x")
+    intercept[Exception] {
+      Manifest.commit(spark, t) { dir => straggling.write.parquet(dir) }
+    }
+    // well past the straggler's write: the released slot must stay empty
+    Thread.sleep(1500)
+    assert(!new java.io.File(s"$t/v1").exists(),
+      "a task of the failed write recreated the released version dir")
+    assert(Manifest.write((1L to 3L).toDF("x"), t) == 1)
+  }
+
   test("vacuum reclaims AGED stale claims above the newest marker " +
     "(the wedged-append remediation) and spares fresh in-flight ones") {
     val t = tmp()
