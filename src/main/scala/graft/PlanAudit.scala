@@ -15,10 +15,14 @@ object PlanAudit {
     sb.append("# PLANS — physical-plan audit (generated by graft.PlanAudit)\n\n")
     sb.append(s"One row per `SparkEntry` query at `$sfDir`. Exchanges counted on\n")
     sb.append("the UNRESOLVED-AQE plan (AQE may further coalesce at runtime);\n")
-    sb.append("joins list the planned strategies. `q_dedup_clusters` executes its\n")
-    sb.append("iterations eagerly at plan-build time, so its row reflects the\n")
-    sb.append("final projection only — see Dedup.clusterComponents for its\n")
-    sb.append("per-iteration shape.\n\n")
+    sb.append("joins list the planned strategies. `q_dedup_clusters` runs its\n")
+    sb.append("connected components eagerly at plan-build time, so its row reflects\n")
+    sb.append("the final projection only. At this scale the edge table fits\n")
+    sb.append("`spark.sql.autoBroadcastJoinThreshold` (16 bytes an edge), so no\n")
+    sb.append("distributed round runs: the driver finishes with union-find, and the\n")
+    sb.append("projection broadcast-joins the node set to that one-slice table (both\n")
+    sb.append("it and the label table carry broadcast hints); `-1` keeps every round\n")
+    sb.append("distributed. See Dedup.clusterComponents for the per-round shape.\n\n")
     sb.append("| query | exchanges | joins | notable operators |\n")
     sb.append("|---|---|---|---|\n")
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>

@@ -33,7 +33,7 @@ import org.apache.spark.sql.functions._
   * anywhere. Round state is one (node, mass) row per node, pinned via
   * lazy `localCheckpoint` and freed as soon as the next round
   * materializes (the connected-components loop's lifecycle,
-  * [[graft.ops.text.Dedup.componentLabels]]); the edge and out-weight
+  * [[graft.ops.text.Dedup.clusterComponents]]); the edge and out-weight
   * tables are pinned once through [[graft.CacheScope]] so K rounds scan
   * the raw input once, not K times.
   *
@@ -1672,7 +1672,7 @@ object Graph {
         .localCheckpoint(false)
       // materialize the round, then free the superseded state's blocks
       // (Dataset.unpersist is a no-op on localCheckpoint blocks — the
-      // componentLabels lifecycle note applies verbatim).
+      // clusterComponents lifecycle note applies verbatim).
       next.count()
       if (residuals.isDefined || stopTol.isDefined) {
         val r = next

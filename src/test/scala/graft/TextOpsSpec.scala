@@ -814,79 +814,125 @@ class TextOpsSpec extends SparkSpec {
       (4, 4L, 9L, 9L, 1.0)))
   }
 
+  // clusterComponents runs distributed rounds while its edge table (16
+  // bytes an edge) exceeds spark.sql.autoBroadcastJoinThreshold, then
+  // finishes on the driver. Every component case runs on both sides:
+  //   default (10 MB) — every input here fits: driver finish, no rounds;
+  //   -1              — never fits: distributed rounds only;
+  //   16 × 200 bytes  — inputs over 200 edges (the 10k path, the 60-clique)
+  //                     run at least one round, then finish on the driver.
+  private val ccBudgets = Seq("default" -> None, "rounds only" -> Some("-1"),
+    "200 edges" -> Some((16 * 200).toString))
+
+  private def atEachCcBudget(body: String => Unit): Unit = ccBudgets.foreach {
+    case (label, None) => body(label)
+    case (label, Some(bytes)) =>
+      withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> bytes)(body(label))
+  }
+
+  /** Plain union-find: every doc in some pair -> min id of its component. */
+  private def unionFindComponents(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    pairs.flatMap(p => Seq(p._1, p._2)).distinct.map(x => x -> find(x)).toMap
+  }
+
+  private def componentRows(pairs: Seq[(Long, Long)], maxIter: Int = 25): Array[(Long, Long)] =
+    Dedup.clusterComponents(pairs.toDF("doc_a", "doc_b"), maxIter)
+      .as[(Long, Long)].collect()
+
+  /** Labels by doc; a doc with two output rows fails here, not in a Map. */
+  private def components(pairs: Seq[(Long, Long)], maxIter: Int = 25): Map[Long, Long] = {
+    val rows = componentRows(pairs, maxIter)
+    val out = rows.toMap
+    assert(rows.length == out.size, s"duplicate doc rows: ${rows.length} rows, ${out.size} docs")
+    out
+  }
+
   test("clusterComponents: chains converge to the min label") {
     // two components: a 5-chain (needs multiple propagation rounds) and a pair
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (10L, 11L))
-      .toDF("doc_a", "doc_b")
-    val out = graft.ops.text.Dedup.clusterComponents(pairs)
-      .as[(Long, Long)].collect().toMap
-    assert(out == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L,
-      10L -> 10L, 11L -> 10L))
+    atEachCcBudget { budget =>
+      val out = components(pairs)
+      assert(out == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L,
+        10L -> 10L, 11L -> 10L), budget)
+      assert(out == unionFindComponents(pairs), budget)
+    }
   }
 
   test("resolveCanonical: cluster minimum survives, singletons keep themselves") {
     val docs = Seq(1L, 2L, 3L, 7L).toDF("doc_id")
     val pairs = Seq((1L, 2L), (2L, 3L)).toDF("doc_a", "doc_b")
-    val out = graft.ops.text.Dedup.resolveCanonical(docs, pairs)
-      .as[(Long, Long, Boolean)].collect().sortBy(_._1).toSeq
-    assert(out == Seq((1L, 1L, true), (2L, 1L, false), (3L, 1L, false),
-      (7L, 7L, true)))
+    atEachCcBudget { budget =>
+      val out = Dedup.resolveCanonical(docs, pairs)
+        .as[(Long, Long, Boolean)].collect().sortBy(_._1).toSeq
+      assert(out == Seq((1L, 1L, true), (2L, 1L, false), (3L, 1L, false),
+        (7L, 7L, true)), budget)
+    }
   }
 
   test("clusterComponents: 10k-node path graph converges in O(log n) rounds") {
     // diameter 9999 — plain min-label propagation would need ~10k rounds
-    // and hard-fail; large-star/small-star must converge within 20.
+    // and hard-fail; large-star/small-star must converge within 20 (the
+    // "rounds only" budget checks the bound with no driver finish).
     val n = 10000L
-    val pairs = (0L until n - 1).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val out = graft.ops.text.Dedup.clusterComponents(pairs, maxIter = 20)
-      .as[(Long, Long)].collect()
-    assert(out.length == n)
-    assert(out.forall(_._2 == 0L),
-      s"all labels must be 0; bad: ${out.filterNot(_._2 == 0L).take(5).toSeq}")
+    val pairs = (0L until n - 1).map(i => (i, i + 1))
+    atEachCcBudget { budget =>
+      val rows = componentRows(pairs, maxIter = 20)
+      assert(rows.length == n, budget)
+      val out = rows.toMap
+      assert(out.forall(_._2 == 0L),
+        s"$budget: all labels must be 0; bad: ${out.filterNot(_._2 == 0L).take(5).toSeq}")
+      assert(out == unionFindComponents(pairs), budget)
+    }
   }
 
   test("clusterComponents: self-pairs label themselves") {
-    val pairs = Seq((5L, 5L), (1L, 2L)).toDF("doc_a", "doc_b")
-    val out = graft.ops.text.Dedup.clusterComponents(pairs)
-      .as[(Long, Long)].collect().toMap
-    assert(out == Map(5L -> 5L, 1L -> 1L, 2L -> 1L))
+    val pairs = Seq((5L, 5L), (1L, 2L))
+    atEachCcBudget { budget =>
+      val out = components(pairs)
+      assert(out == Map(5L -> 5L, 1L -> 1L, 2L -> 1L), budget)
+      assert(out == unionFindComponents(pairs), budget)
+    }
   }
 
   test("resolveBest: highest-quality member survives, ties to min id") {
     val scored = Seq((1L, 0.2), (2L, 0.9), (3L, 0.5), (4L, 0.9))
       .toDF("doc_id", "quality_score")
     val pairs = Seq((1L, 2L), (2L, 4L)).toDF("doc_a", "doc_b")
-    val r = Dedup.resolveBest(scored, pairs)
-      .as[(Long, Long, Boolean)].collect().toSet
-    // component {1,2,4}: best score 0.9 ties between 2 and 4 → 2;
-    // 3 is a singleton and keeps itself
-    assert(r == Set((1L, 2L, false), (2L, 2L, true), (4L, 2L, false),
-      (3L, 3L, true)))
+    atEachCcBudget { budget =>
+      val r = Dedup.resolveBest(scored, pairs)
+        .as[(Long, Long, Boolean)].collect().toSet
+      // component {1,2,4}: best score 0.9 ties between 2 and 4 → 2;
+      // 3 is a singleton and keeps itself
+      assert(r == Set((1L, 2L, false), (2L, 2L, true), (4L, 2L, false),
+        (3L, 3L, true)), budget)
+    }
   }
 
   test("clusterComponents: equals union-find on random graphs") {
     val rng = new scala.util.Random(2027)
-    (0 until 3).foreach { trial =>
+    val random = (0 until 3).map { trial =>
       val n = 60
-      val pairs = Seq.fill(50) {
+      s"random trial $trial" -> Seq.fill(50) {
         val a = rng.nextInt(n).toLong; val b = rng.nextInt(n).toLong
         (math.min(a, b), math.max(a, b))
       }.filter(p => p._1 != p._2).distinct
-      val got = graft.ops.text.Dedup.clusterComponents(pairs.toDF("doc_a", "doc_b"))
-        .as[(Long, Long)].collect().toMap
-      // reference: plain union-find
-      val parent = scala.collection.mutable.Map[Long, Long]()
-      def find(x: Long): Long = {
-        val p = parent.getOrElseUpdate(x, x)
-        if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    // 1,770 edges > 200: the "200 edges" budget runs a round before its
+    // driver finish (one round contracts a clique to a 59-edge star)
+    val clique = "60-clique" -> (for (a <- 0L until 60L; b <- a + 1 until 60L) yield (a, b))
+    atEachCcBudget { budget =>
+      (random :+ clique).foreach { case (input, pairs) =>
+        assert(components(pairs) == unionFindComponents(pairs), s"$budget, $input")
       }
-      pairs.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val expected = pairs.flatMap(p => Seq(p._1, p._2)).distinct
-        .map(x => x -> find(x)).toMap
-      assert(got == expected, s"trial $trial")
     }
   }
 
